@@ -373,6 +373,7 @@ class _PartialBuilder:
             ids = np.fromiter((self.tid_of(tk) for _, tk in kept),
                               np.int64, len(kept))
             idxs = np.fromiter((i for i, _ in kept), np.int32, len(kept))
+            self.add(doc_id, ids, idxs, n0)
         else:
             self.pend.append((doc_id, toks, n0))
             self.acc += n0

@@ -394,8 +394,9 @@ class Searcher:
 
     - **batch** (many queries): one mapInArrow job runs WAND/exhaustive
       per (query, doc_range) locally and the driver merges the tiny
-      per-range top-k lists — amortizes the ~150 ms Python-runner setup
-      across the whole query batch.
+      per-range top-k lists — amortizes the job's fixed cost (a 1-query
+      batch takes ~210 ms at 20k docs on 4 cores) across the whole
+      query batch.
     - **single-query flat path**: a decoded JVM-side projection
       (term_id, doc_range, doc_id, impact) cached sorted-by-term per
       doc_range partition. A query is then PURE DataFrame algebra — an
@@ -406,8 +407,8 @@ class Searcher:
       in the loop. Executed interpreted (codegen off, scoped): the
       embedded query-term literals would force a fresh ~150-200 ms
       Janino compile per query, which dwarfs interpreted evaluation
-      over the stat-pruned batches. Measured p50 ~115 ms vs ~300 ms
-      through the Python path at sf0.1 (100k docs).
+      over the stat-pruned batches. Measured p50 ~125 ms vs ~210 ms
+      through the Python path at 20k docs on 4 cores.
 
     The flat cache holds one row per posting (~3x the encoded blocks);
     at cluster scale each executor caches only its own doc ranges
@@ -563,9 +564,11 @@ ORDER BY score DESC, doc_id LIMIT {k}"""
         rows = self._serving.sql(sql).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
-    # below this many queries, per-query flat-path jobs beat one
-    # Python-runner batch job (~115 ms each vs ~300 ms + 40 ms/query)
-    FLAT_BATCH_MAX = 3
+    # up to this many queries, per-query flat-path jobs beat one
+    # Python-runner batch job. Interleaved at 20k docs on 4 cores: flat
+    # ~125 ms/query; batch 210/280/300 ms for 1/2/3 queries, faster than
+    # flat in 3/10 pairs at 2 queries and 9/10 at 3
+    FLAT_BATCH_MAX = 2
 
     def close(self) -> None:
         """Release the serving caches (block + flat) and the temp view."""

@@ -191,6 +191,59 @@ def test_build_from_corpus_matches_tokens_path(spark):
     assert o.count() == new.count() > 0
 
 
+def test_vocab_filter_build_equals_prefiltered_build(spark):
+    """build_postings(vocab_filter=V) indexes exactly the tokens in V:
+    the same (term, doc, tf) postings as a build over the tokens
+    pre-filtered to V, and, because doc lengths and positions still
+    count every token, the same block bytes as the unfiltered build
+    restricted to V's terms."""
+    import random
+
+    import numpy as np
+    from pears_lite_spark.index import codec
+    from pears_lite_spark.index.build import range_shift_for
+    from pears_lite_spark.xxh64 import xxh64_signed
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(60)]
+    docs = [(d, [rng.choice(words) for _ in range(rng.randint(1, 40))])
+            for d in range(300)]
+    vocab = set(words[::3])
+    schema = "doc_id long, tokens array<string>"
+    toks = spark.createDataFrame(docs, schema)
+    pre = spark.createDataFrame(
+        [(d, [t for t in ts if t in vocab]) for d, ts in docs], schema)
+    stats = corpus_stats(toks)
+    shift = range_shift_for(stats.n_docs)
+    vdf = spark.createDataFrame([(t,) for t in sorted(vocab)], "term string")
+    filt, _ = build_postings(toks, stats=stats, range_shift=shift,
+                             vocab_filter=vdf)
+    full, _ = build_postings(toks, stats=stats, range_shift=shift)
+    pref, _ = build_postings(pre, stats=stats, range_shift=shift)
+
+    def rows(postings):
+        return sorted((tuple(bytes(v) if isinstance(v, (bytes, bytearray))
+                             else v for v in r) for r in postings.collect()),
+                      key=lambda r: r[:3])
+
+    def triples(postings):
+        out = set()
+        for r in postings.collect():
+            n = r["n"]
+            out |= {(r["term_id"], int(d), int(f)) for d, f in zip(
+                codec.decode_block_docs(bytes(r["docs"]), n),
+                codec.decode_block_tfs(bytes(r["tfs"]), n))}
+        return out
+
+    vocab_ids = {xxh64_signed(t) for t in vocab}
+    got = rows(filt)
+    assert {r[0] for r in got} == vocab_ids
+    assert got == [r for r in rows(full) if r[0] in vocab_ids]
+    assert triples(filt) == triples(pref)
+    n_kept = sum(t in vocab for _, ts in docs for t in ts)
+    assert sum(f for _, _, f in triples(filt)) == n_kept
+    assert np.all(np.array([r[5] for r in got]) > 0)
+
+
 def test_duplicate_doc_id_runs_merge_in_phase_b(spark):
     """The same doc_id arriving in two phase-A splits must collapse to
     ONE posting run (tf summed, positions union-sorted) — otherwise
